@@ -123,12 +123,6 @@ object Scores {
       .when(avgStarVelocity < 0.1, "declining")
       .otherwise("stable")
 
-  /** Reference-exact momentum trend (silver_to_gold_analytics.py:210-213):
-    * velocity>0.5 rising, >0.1 stable, else declining. */
-  def momentumTrend(avgStarVelocity: Column): Column =
-    when(avgStarVelocity > 0.5, "rising")
-      .when(avgStarVelocity > 0.1, "stable").otherwise("declining")
-
   /** Popularity tier from stars — *coarse adaptation* (S/A/B/C/D); see
     * [[popularityTierRef]] for the reference's six named tiers. */
   def popularityTier(stars: Column): Column =

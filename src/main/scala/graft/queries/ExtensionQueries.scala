@@ -1456,7 +1456,6 @@ object ExtensionQueries {
     Q(
       "d10_incremental_dedup",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
         val docs = Tables.documents(s, d)
         val batch = docs.filter(col("doc_id") % 5 === 0)
         val corpus = docs.filter(col("doc_id") % 5 =!= 0)
@@ -1470,10 +1469,7 @@ object ExtensionQueries {
         // job reads yesterday's signature index; any input mutation
         // changes the key and forces a rebuild. The steady-state cost
         // of this query is stage 2 alone.
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val stateDir = s"${sys.props("java.io.tmpdir")}/graft_dedup_state_$suffix"
-        val marker = Paths.get(s"$stateDir/_complete")
-        if (!Files.exists(marker)) {
+        val stateDir = graft.storage.Scratch.once("dedup_state", d) { fresh =>
           val csh = Dedup.shingles(corpus, "doc_id", "text", dedupe = false)
             .persist()
           val csigs0 = Dedup.minhashSignaturesNarrow(corpus, "doc_id", "text",
@@ -1485,10 +1481,9 @@ object ExtensionQueries {
             .filter(col("jaccard") >= 0.5).select("id_a", "id_b")
           val cclusters0 = Graph.connectedComponents(corpus.select("doc_id"),
             "doc_id", cver)
-          csigs0.write.mode("overwrite").parquet(s"$stateDir/sigs")
-          cclusters0.write.mode("overwrite").parquet(s"$stateDir/clusters")
-          Files.createFile(marker) // last: an interrupted build rebuilds
-        }
+          csigs0.write.mode("overwrite").parquet(s"${fresh.root}/sigs")
+          cclusters0.write.mode("overwrite").parquet(s"${fresh.root}/clusters")
+        }.root
         val csigs = s.read.parquet(s"$stateDir/sigs")
         val cclusters = s.read.parquet(s"$stateDir/clusters")
         // stage 2 — the increment

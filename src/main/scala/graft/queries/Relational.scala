@@ -41,6 +41,17 @@ object Relational {
     s"sqrt(($sxx - $sx * $sx / $n) / ($n - 1.0))"
   }
 
+  /** Registers a [[graft.spark.GraftCatalog]] named `<prefix><key>` over
+    * the scratch state's root; returns the catalog name. */
+  private def mount(s: SparkSession, prefix: String,
+      st: graft.storage.Scratch.State): String = {
+    val cname = prefix + st.key
+    s.conf.set(s"spark.sql.catalog.$cname",
+      classOf[graft.spark.GraftCatalog].getName)
+    s.conf.set(s"spark.sql.catalog.$cname.root", st.root)
+    cname
+  }
+
   val all: Seq[Q] = Seq(
     // ----------------------------------------------------------------
     // A1 (13-measure rollup, silver_to_gold_analytics.py:132-159):
@@ -1099,19 +1110,14 @@ object Relational {
     Q(
       "s9_skipping_scan",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_skip_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        if (!Files.exists(marker)) {
-          val cat = new graft.storage.ParquetCatalog(s, root)
+        val root = graft.storage.Scratch.once("skip", d) { fresh =>
+          val cat = new graft.storage.ParquetCatalog(s, fresh.root)
           cat.overwrite("orders", Tables.orders(s, d))
           cat.compact("orders", rowsPerFile = 2000,
             clusterBy = Seq("o_orderkey"))
-          graft.storage.SkippingIndex.write(s, s"$root/orders",
+          graft.storage.SkippingIndex.write(s, s"${fresh.root}/orders",
             Seq("o_orderkey"))
-          Files.createFile(marker)
-        }
+        }.root
         graft.storage.SkippingIndex
           .scan(s, s"$root/orders", "o_orderkey", 1000, 3000)
           .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -1135,12 +1141,8 @@ object Relational {
     Q(
       "s10_range_read",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_rr_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val root = graft.storage.Scratch.once("rr", d) { fresh =>
+          val cat = new graft.storage.ParquetCatalog(s, fresh.root)
           val li = Tables.lineitem(s, d)
             .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
           cat.overwrite("li_idx", li.filter(col("l_orderkey") % 5 =!= 0))
@@ -1150,8 +1152,8 @@ object Relational {
           // appended AFTER indexing: the catalog's incremental refresh
           // must fold these files in, or the range read drops rows
           cat.append("li_idx", li.filter(col("l_orderkey") % 5 === 0))
-          Files.createFile(marker)
-        }
+        }.root
+        val cat = new graft.storage.ParquetCatalog(s, root)
         cat.readRange("li_idx",
             Seq(("l_orderkey", 1000.0, 4000.0), ("l_partkey", 0.0, 500.0)))
           .agg(count(lit(1)).as("n_rows"),
@@ -1181,18 +1183,13 @@ object Relational {
     Q(
       "s11_bloom_point",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_blm_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root,
-          bloomFor = Seq("l_orderkey"), bloomNdv = 100000L)
         val li = Tables.lineitem(s, d)
           .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-        if (!Files.exists(marker)) {
-          cat.overwrite("li_b", li.repartition(24))
-          Files.createFile(marker)
-        }
+        def bloomed(root: String) = new graft.storage.ParquetCatalog(s, root,
+          bloomFor = Seq("l_orderkey"), bloomNdv = 100000L)
+        val cat = bloomed(graft.storage.Scratch.once("blm", d) { fresh =>
+          bloomed(fresh.root).overwrite("li_b", li.repartition(24))
+        }.root)
         val key = li.agg(max(col("l_orderkey"))).head().getLong(0)
         val pruned =
           if (cat.pointCandidates("li_b", "l_orderkey", key).size * 2 <
@@ -1230,24 +1227,16 @@ object Relational {
     Q(
       "s12_spj_join",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_spj_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val st = graft.storage.Scratch.once("spj", d) { fresh =>
+          val cat = new graft.storage.ParquetCatalog(s, fresh.root)
           val o = Tables.orders(s, d)
             .select("o_orderkey", "o_totalprice", "o_orderstatus")
           cat.overwriteVersioned("orders_spj", o, Seq("o_orderstatus"))
           cat.overwriteVersioned("status_dim",
             o.groupBy("o_orderstatus").agg(count(lit(1)).as("status_n")),
             Seq("o_orderstatus"))
-          Files.writeString(marker, "ok")
         }
-        val cname = s"gspj$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = mount(s, "gspj", st)
         val toggled = Seq(
           "spark.sql.sources.v2.bucketing.enabled" -> "true",
           "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
@@ -1298,12 +1287,8 @@ object Relational {
     Q(
       "s13_sql_skip",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_sqs_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val st = graft.storage.Scratch.once("sqs", d) { fresh =>
+          val cat = new graft.storage.ParquetCatalog(s, fresh.root)
           val o = Tables.orders(s, d)
             .select("o_orderkey", "o_custkey", "o_totalprice")
           cat.overwriteVersioned("orders_skip", o)
@@ -1313,12 +1298,8 @@ object Relational {
           cat.compact("orders_skip",
             rowsPerFile = math.max(1L, n / 12), clusterBy = Seq("o_orderkey"))
           cat.index("orders_skip", Seq("o_orderkey"))
-          Files.writeString(marker, "ok")
         }
-        val cname = s"gsk$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = mount(s, "gsk", st)
         val q = s.sql(
           s"""SELECT o_orderkey, o_custkey, o_totalprice
               FROM $cname.orders_skip
@@ -1351,23 +1332,15 @@ object Relational {
     Q(
       "s14_sql_bloom",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_sqb_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val bcat = new graft.storage.ParquetCatalog(s, root,
-          bloomFor = Seq("l_orderkey"), bloomNdv = 100000L)
         val li = Tables.lineitem(s, d)
           .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-        if (!Files.exists(marker)) {
+        val st = graft.storage.Scratch.once("sqb", d) { fresh =>
+          val bcat = new graft.storage.ParquetCatalog(s, fresh.root,
+            bloomFor = Seq("l_orderkey"), bloomNdv = 100000L)
           bcat.overwriteVersioned("li_sb", li.repartition(24))
           bcat.index("li_sb", Seq("l_orderkey"))
-          Files.writeString(marker, "ok")
         }
-        val cname = s"gsb$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = mount(s, "gsb", st)
         val key = li.agg(max(col("l_orderkey"))).head().getLong(0)
         val q = s.sql(
           s"""SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
@@ -1406,23 +1379,15 @@ object Relational {
     Q(
       "s15_sql_count",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_sqc_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val st = graft.storage.Scratch.once("sqc", d) { fresh =>
+          val cat = new graft.storage.ParquetCatalog(s, fresh.root)
           val o = Tables.orders(s, d)
             .select("o_orderkey", "o_totalprice", "o_orderstatus")
           cat.overwriteVersioned("orders_cnt", o, Seq("o_orderstatus"))
           cat.setTableProperty("orders_cnt", "graft.deletionVectors", "true")
           cat.deleteVectors("orders_cnt", col("o_orderkey") % 100 === 55)
-          Files.writeString(marker, "ok")
         }
-        val cname = s"gct$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = mount(s, "gct", st)
         val cur = s.sql(s"SELECT count(*) FROM $cname.orders_cnt")
         val v1 = s.sql(
           s"SELECT count(*) FROM $cname.orders_cnt VERSION AS OF 1")
@@ -1452,15 +1417,11 @@ object Relational {
     Q(
       "s16_sql_time_skip",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
         // _tsk2: the r18 full-annotation index tags obsolete any _tsk
         // scratch built by earlier rounds (its truncated tags would no
         // longer match and the pruning pin would read stale)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_tsk2_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val st = graft.storage.Scratch.once("tsk2", d) { fresh =>
+          val cat = new graft.storage.ParquetCatalog(s, fresh.root)
           val o = Tables.orders(s, d)
             .select("o_orderkey", "o_totalprice", "o_orderdate")
           cat.overwriteVersioned("orders_ts", o)
@@ -1468,12 +1429,8 @@ object Relational {
           cat.compact("orders_ts",
             rowsPerFile = math.max(1L, n / 12), clusterBy = Seq("o_orderdate"))
           cat.index("orders_ts", Seq("o_orderdate"))
-          Files.writeString(marker, "ok")
         }
-        val cname = s"gst$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = mount(s, "gst", st)
         val q = s.sql(
           s"""SELECT o_orderkey, o_totalprice
               FROM $cname.orders_ts
@@ -1514,17 +1471,10 @@ object Relational {
     Q(
       "s17_sql_tblprops",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_tbp_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cname = s"gtp$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
         val li = Tables.lineitem(s, d)
           .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-        if (!Files.exists(marker)) {
+        val st = graft.storage.Scratch.once("tbp", d) { fresh =>
+          val cname = mount(s, "gtp", fresh)
           li.createOrReplaceTempView("li_props_src")
           s.sql(
             s"""CREATE TABLE $cname.li_props
@@ -1536,8 +1486,8 @@ object Relational {
             s"""INSERT INTO $cname.li_props
                 SELECT /*+ REPARTITION(8) */ * FROM li_props_src
                 WHERE l_linenumber > 4""")
-          Files.writeString(marker, "ok")
         }
+        val cname = mount(s, "gtp", st)
         val key = li.agg(max(col("l_orderkey"))).head().getLong(0)
         val q = s.sql(
           s"""SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
@@ -1578,22 +1528,14 @@ object Relational {
     Q(
       "s18_sql_meta_agg",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_sma2_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val st = graft.storage.Scratch.once("sma2", d) { fresh =>
+          val cat = new graft.storage.ParquetCatalog(s, fresh.root)
           val o = Tables.orders(s, d)
             .select("o_orderkey", "o_totalprice", "o_orderstatus")
           cat.overwriteVersioned("orders_ma", o, Seq("o_orderstatus"))
           cat.index("orders_ma", Seq("o_orderkey"))
-          Files.writeString(marker, "ok")
         }
-        val cname = s"gma$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = mount(s, "gma", st)
         val mm = s.sql(
           s"""SELECT min(o_orderkey) AS min_key, max(o_orderkey) AS max_key,
                      count(o_orderkey) AS n_keys
@@ -1636,12 +1578,8 @@ object Relational {
     Q(
       "s19_sql_bucket_join",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_sbj_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val st = graft.storage.Scratch.once("sbj", d) { fresh =>
+          val cat = new graft.storage.ParquetCatalog(s, fresh.root)
           cat.overwriteBucketedVersioned("orders_b",
             Tables.orders(s, d)
               .select("o_orderkey", "o_custkey", "o_totalprice"),
@@ -1649,12 +1587,8 @@ object Relational {
           cat.overwriteBucketedVersioned("cust_b",
             Tables.customer(s, d).select("c_custkey", "c_name"),
             "c_custkey", 16)
-          Files.writeString(marker, "ok")
         }
-        val cname = s"gbj$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = mount(s, "gbj", st)
         val toggled = Seq(
           "spark.sql.sources.v2.bucketing.enabled" -> "true",
           "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
@@ -1700,12 +1634,8 @@ object Relational {
     Q(
       "s20_sql_dfp",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_dfp_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val st = graft.storage.Scratch.once("dfp", d) { fresh =>
+          val cat = new graft.storage.ParquetCatalog(s, fresh.root)
           val o = Tables.orders(s, d)
             .select("o_orderkey", "o_custkey", "o_totalprice")
           cat.overwriteVersioned("orders_dfp", o)
@@ -1718,12 +1648,8 @@ object Relational {
             o.select("o_orderkey").distinct()
               .filter(col("o_orderkey").between(1000, 1400))
               .withColumn("flag", lit(1L)))
-          Files.writeString(marker, "ok")
         }
-        val cname = s"gdfp$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = mount(s, "gdfp", st)
         val q = s.sql(
           s"""SELECT f.o_orderkey, f.o_custkey, f.o_totalprice
               FROM $cname.orders_dfp f
@@ -1767,12 +1693,8 @@ object Relational {
     Q(
       "s21_sql_part_bucket",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_cpb_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val st = graft.storage.Scratch.once("cpb", d) { fresh =>
+          val cat = new graft.storage.ParquetCatalog(s, fresh.root)
           cat.overwriteBucketedVersioned("orders_pb",
             Tables.orders(s, d).select("o_orderkey", "o_custkey",
               "o_orderstatus", "o_totalprice"),
@@ -1780,12 +1702,8 @@ object Relational {
           cat.overwriteBucketedVersioned("cust_pb",
             Tables.customer(s, d).select("c_custkey", "c_name"),
             "c_custkey", 16)
-          Files.writeString(marker, "ok")
         }
-        val cname = s"gpb$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = mount(s, "gpb", st)
         val toggled = Seq(
           "spark.sql.sources.v2.bucketing.enabled" -> "true",
           "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
@@ -1838,33 +1756,26 @@ object Relational {
     Q(
       "s22_sql_bucket_ddl",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_bdl_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cname = s"gbd$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
-        if (!Files.exists(marker)) {
+        val st = graft.storage.Scratch.once("bdl", d) { fresh =>
+          val cname = mount(s, "gbd", fresh)
           Tables.orders(s, d)
             .select("o_orderkey", "o_custkey", "o_totalprice")
-            .createOrReplaceTempView(s"orders_src_$suffix")
+            .createOrReplaceTempView(s"orders_src_${fresh.key}")
           Tables.customer(s, d).select("c_custkey", "c_name")
-            .createOrReplaceTempView(s"cust_src_$suffix")
+            .createOrReplaceTempView(s"cust_src_${fresh.key}")
           s.sql(
             s"""CREATE TABLE $cname.orders_bd
                 PARTITIONED BY (bucket(16, o_custkey))
-                AS SELECT * FROM orders_src_$suffix WHERE o_orderkey > 1000""")
+                AS SELECT * FROM orders_src_${fresh.key} WHERE o_orderkey > 1000""")
           s.sql(
             s"""INSERT INTO $cname.orders_bd
-                SELECT *, 0 FROM orders_src_$suffix WHERE o_orderkey <= 1000""")
+                SELECT *, 0 FROM orders_src_${fresh.key} WHERE o_orderkey <= 1000""")
           s.sql(
             s"""CREATE TABLE $cname.cust_bd
                 TBLPROPERTIES('graft.bucketBy'='c_custkey,16')
-                AS SELECT * FROM cust_src_$suffix""")
-          Files.writeString(marker, "ok")
+                AS SELECT * FROM cust_src_${fresh.key}""")
         }
+        val cname = mount(s, "gbd", st)
         val toggled = Seq(
           "spark.sql.sources.v2.bucketing.enabled" -> "true",
           "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
@@ -1908,12 +1819,8 @@ object Relational {
     Q(
       "s23_sql_bucket_dv",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_bdv_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val st = graft.storage.Scratch.once("bdv", d) { fresh =>
+          val cat = new graft.storage.ParquetCatalog(s, fresh.root)
           cat.overwriteBucketedVersioned("orders_bv",
             Tables.orders(s, d)
               .select("o_orderkey", "o_custkey", "o_totalprice"),
@@ -1923,12 +1830,8 @@ object Relational {
             "c_custkey", 16)
           cat.setTableProperty("orders_bv", "graft.deletionVectors", "true")
           cat.deleteVectors("orders_bv", col("o_orderkey") % 10 === 3)
-          Files.writeString(marker, "ok")
         }
-        val cname = s"gbv$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = mount(s, "gbv", st)
         val toggled = Seq(
           "spark.sql.sources.v2.bucketing.enabled" -> "true",
           "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
@@ -1976,12 +1879,8 @@ object Relational {
     Q(
       "s24_sql_string_skip",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_ssk_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val st = graft.storage.Scratch.once("ssk", d) { fresh =>
+          val cat = new graft.storage.ParquetCatalog(s, fresh.root)
           val cust = Tables.customer(s, d)
             .select("c_custkey", "c_name", "c_acctbal")
           cat.overwriteVersioned("cust_ss", cust)
@@ -1989,12 +1888,8 @@ object Relational {
           cat.compact("cust_ss",
             rowsPerFile = math.max(1L, n / 12), clusterBy = Seq("c_name"))
           cat.index("cust_ss", Seq("c_name"))
-          Files.writeString(marker, "ok")
         }
-        val cname = s"gss$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = mount(s, "gss", st)
         val q = s.sql(
           s"""SELECT c_custkey, c_name, c_acctbal FROM $cname.cust_ss
               WHERE c_name BETWEEN 'Customer#000000100'
@@ -2032,12 +1927,8 @@ object Relational {
     Q(
       "s25_sql_decimal_skip",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_dsk_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val st = graft.storage.Scratch.once("dsk", d) { fresh =>
+          val cat = new graft.storage.ParquetCatalog(s, fresh.root)
           val o = Tables.orders(s, d).select(col("o_orderkey"),
             col("o_totalprice")
               .cast(org.apache.spark.sql.types.DecimalType(12, 2))
@@ -2047,12 +1938,8 @@ object Relational {
           cat.compact("orders_dec",
             rowsPerFile = math.max(1L, n / 12), clusterBy = Seq("price"))
           cat.index("orders_dec", Seq("price"))
-          Files.writeString(marker, "ok")
         }
-        val cname = s"gdk$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = mount(s, "gdk", st)
         val q = s.sql(
           s"""SELECT o_orderkey, price FROM $cname.orders_dec
               WHERE price BETWEEN 30000.00 AND 60000.00""")
@@ -2096,22 +1983,14 @@ object Relational {
     Q(
       "s26_sql_string_meta",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_ssm_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val st = graft.storage.Scratch.once("ssm", d) { fresh =>
+          val cat = new graft.storage.ParquetCatalog(s, fresh.root)
           val cust = Tables.customer(s, d)
             .select("c_custkey", "c_name", "c_mktsegment")
           cat.overwriteVersioned("cust_sm", cust, Seq("c_mktsegment"))
           cat.index("cust_sm", Seq("c_name"))
-          Files.writeString(marker, "ok")
         }
-        val cname = s"gsm$suffix"
-        s.conf.set(s"spark.sql.catalog.$cname",
-          classOf[graft.spark.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cname.root", root)
+        val cname = mount(s, "gsm", st)
         val mm = s.sql(
           s"""SELECT min(c_name) AS min_name, max(c_name) AS max_name
               FROM $cname.cust_sm""")

@@ -505,18 +505,14 @@ object TimeSeriesQueries {
     Q(
       "gov3_rtbf_purge",
       (s, d) => {
-        import java.nio.file.{Files, Paths}
         val subjects = Seq(7L, 42L, 99L)
-        val suffix = graft.storage.Scratch.fingerprint(d).take(8)
-        val root = s"${sys.props("java.io.tmpdir")}/graft_rtbf_$suffix"
-        val marker = Paths.get(s"$root/_complete")
-        val cat = new graft.storage.ParquetCatalog(s, root)
-        if (!Files.exists(marker)) {
+        val root = graft.storage.Scratch.once("rtbf", d) { fresh =>
+          val cat = new graft.storage.ParquetCatalog(s, fresh.root)
           cat.overwrite("events_p", Tables.events(s, d)
             .select("event_id", "user_id", "event_type", "value"))
           cat.delete("events_p", col("user_id").isin(subjects: _*))
-          Files.createFile(marker)
-        }
+        }.root
+        val cat = new graft.storage.ParquetCatalog(s, root)
         cat.read("events_p")
           .groupBy("event_type")
           .agg(

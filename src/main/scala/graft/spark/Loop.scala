@@ -1,5 +1,7 @@
 package graft.spark
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Shuffle/AQE pinning for iterative driver loops (Lloyd rounds, label
@@ -17,11 +19,13 @@ import org.apache.spark.sql.SparkSession
   * re-planning inside the loop removes that constant without touching
   * the operators' one-shuffle-per-round shape.
   *
-  * Scale contract: the pinned width is `spark.graft.loop.partitions`
-  * (default 4). On a large cluster where the dup-edge set itself is
-  * huge (label propagation over billions of duplicate docs), raise it
-  * — the knob exists precisely so the 100× path is a deliberate
-  * choice, not a silent recompile.
+  * Scale contract: the pinned width is derived by [[widthFor]] — the
+  * loop input's scan parallelism clamped to [4, session shuffle width]
+  * — and is 4 for loops that pass no hint. `spark.graft.loop.partitions`
+  * overrides it: on a large cluster where the dup-edge set itself is
+  * huge (label propagation over billions of duplicate docs), set it —
+  * the knob exists precisely so the 100× path is a deliberate choice,
+  * not a silent recompile.
   *
   * Conf changes are session-wide while the body runs; callers only
   * wrap driver-side loops whose actions all execute inside (Spark
@@ -50,10 +54,10 @@ object Loop {
     val spark = input.sparkSession
     val session =
       try spark.conf.get("spark.sql.shuffle.partitions").toInt
-      catch { case _: Throwable => 200 }
+      catch { case NonFatal(_) => 200 }
     val in =
       try input.rdd.getNumPartitions
-      catch { case _: Throwable => 4 }
+      catch { case NonFatal(_) => 4 }
     Some(math.max(4, math.min(session, in)))
   }
 

@@ -1791,12 +1791,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     }
   }
 
-  /** [[deleteVectors]] under [[withRetry]]: each attempt re-reads the
-    * now-current snapshot and re-applies the predicate. */
-  def deleteVectorsWithRetry(name: String, condition: Column,
-      maxAttempts: Int = 3): (Long, Long) =
-    withRetry(maxAttempts)(deleteVectors(name, condition))
-
   /** Merge-on-read row-level UPDATE (Delta's deletion-vector UPDATE):
     * matched rows' OLD positions are vectored out and their UPDATED
     * images appended as new files — a point UPDATE on a 100 TB table
@@ -1886,11 +1880,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
       ()
     }
   }
-
-  /** [[updateVectors]] under [[withRetry]]. */
-  def updateVectorsWithRetry(name: String, condition: Column,
-      assignments: Map[String, Column], maxAttempts: Int = 3): (Long, Long) =
-    withRetry(maxAttempts)(updateVectors(name, condition, assignments))
 
   /** Merge-on-read keyed MERGE (Delta's dv-enabled MERGE): matched
     * target rows' OLD positions are vectored out and their RESOLVED
@@ -3849,7 +3838,7 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     * CONCURRENCY PROOF (why sync needs no merge-style read-set guard):
     * this verb commits via [[commitOrClean]], NEVER
     * [[fastForwardScoped]] — a lost CAS always throws
-    * [[ConcurrentWriteException]], and [[applyChangesWithRetry]]
+    * [[ConcurrentWriteException]], and a [[withRetry]] around it
     * re-reads the WINNER's committed state before recomputing, so the
     * loser's effects are always computed loser-second over the winner.
     * The recompute SLICE is complete for the fed keys because
@@ -3921,15 +3910,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
     refreshIndex(name)
     next
   }
-
-  /** Files ADDED by one commit, from its raw manifest alone: exact for
-    * delta manifests (the high-rate append form), an OVERSTATEMENT for
-    * self-contained ones (full list — overwrites, and every Nth
-    * snapshot append), which is the conservative direction for the one
-    * consumer (streaming admission control: batches can only get
-    * smaller). One file parse, no chain resolution. */
-  private[graft] def filesAddedIn(name: String, version: Long): Long =
-    rawManifest(name, version).files.size.toLong
 
   /** Bytes the commit of `version` added: the `bytesAdded` meta the
     * commit funnel records (one raw-manifest parse, no file IO). For
@@ -4565,42 +4545,6 @@ final class ParquetCatalog(spark: SparkSession, root: String,
         partitionBy, evolveSchema, p)
     }
   }
-
-  /** [[appendVersioned]] under [[withRetry]] — the concurrent-writers
-    * convenience for the highest-rate verb (appends conflict only on
-    * the version NUMBER, never on content, so a retried append is
-    * always safe; the batch token still dedupes replays). */
-  def appendVersionedWithRetry(name: String, df: DataFrame,
-      partitionBy: Seq[String] = Nil, evolveSchema: Boolean = false,
-      batchToken: Option[String] = None, maxAttempts: Int = 3): Long =
-    withRetry(maxAttempts)(
-      appendVersioned(name, df, partitionBy, evolveSchema, batchToken))
-
-  /** [[deleteVersioned]] under [[withRetry]]: each attempt re-reads the
-    * current snapshot and re-applies the predicate. */
-  def deleteVersionedWithRetry(name: String, condition: Column,
-      partitionBy: Seq[String] = Nil, maxAttempts: Int = 3): (Long, Long) =
-    withRetry(maxAttempts)(deleteVersioned(name, condition, partitionBy))
-
-  /** [[updateWhere]] under [[withRetry]]: each attempt re-reads the
-    * now-current snapshot and re-applies condition + assignments, so a
-    * raced UPDATE composes with the interleaved commit instead of
-    * throwing (the same contract the registered catalog's DELETE path
-    * already has). */
-  def updateWhereWithRetry(name: String, condition: Column,
-      assignments: Map[String, Column], partitionBy: Seq[String] = Nil,
-      maxAttempts: Int = 3): (Long, Long) =
-    withRetry(maxAttempts)(
-      updateWhere(name, condition, assignments, partitionBy))
-
-  /** [[applyChanges]] under [[withRetry]]: a lost race re-applies the
-    * feed against the interleaved commit's state; the batch token
-    * keeps a replayed window a no-op either way. */
-  def applyChangesWithRetry(name: String, feed: DataFrame,
-      keys: Seq[String], partitionBy: Seq[String] = Nil,
-      batchToken: Option[String] = None, maxAttempts: Int = 3): Long =
-    withRetry(maxAttempts)(
-      applyChanges(name, feed, keys, partitionBy, batchToken))
 
   /** Retention: drop all but the newest `keep` versions' manifests,
     * then delete data files REFERENCE-COUNTED — a file is removable

@@ -39,20 +39,20 @@ final class ConcurrentWriteException(msg: String) extends RuntimeException(msg)
   *     funnel strictly monotonic per table (`TIMESTAMP AS OF` anchor);
   *   - `constraint.<name>` — a CHECK constraint's SQL expression,
   *     carried on every commit and enforced inside each staging write.
+  *
+  * With `base` set the manifest is a DELTA: `files` are the entries
+  * ADDED (and `removes` the entries dropped) relative to the resolved
+  * file set of version `base` — commit metadata is O(delta), not
+  * O(table). Readers resolve through [[ParquetCatalog.manifest]], which
+  * chases the (snapshot-bounded) base chain and returns the
+  * materialized form; `meta` and `partitionBy` are NEVER inherited —
+  * each delta records its own in full (they are O(1)-small, and
+  * carrying them forward is what lets the txn registry survive
+  * retention).
   */
 final case class TableManifest(version: Long, partitionBy: Seq[String],
     meta: Map[String, String], files: Seq[String],
     base: Option[Long] = None, removes: Seq[String] = Nil) {
-
-  /** True for a DELTA manifest: `files` are the entries ADDED (and
-    * `removes` the entries dropped) relative to the resolved file set
-    * of version `base` — commit metadata is O(delta), not O(table).
-    * Readers resolve through [[ParquetCatalog.manifest]], which chases
-    * the (snapshot-bounded) base chain and returns the materialized
-    * form; `meta` and `partitionBy` are NEVER inherited — each delta
-    * records its own in full (they are O(1)-small, and carrying them
-    * forward is what lets the txn registry survive retention). */
-  def isDelta: Boolean = base.isDefined
 
   /** The hive `k=v[/k=v...]` partition component of one manifest entry
     * (empty for unpartitioned layouts). */

@@ -66,23 +66,6 @@ object EventsStream {
       }
       .start()
 
-  /** [[mergeSink]] with COMMIT-level exactly-once on the versioned
-    * tier: each micro-batch merges through
-    * [[graft.storage.ParquetCatalog.upsertBatch]] with a
-    * batchId-tagged token, so a re-delivered batch commits NOTHING —
-    * the version chain itself is untouched under replay (the append
-    * sink's guarantee, extended to update-shaped streams). */
-  def mergeSinkExactlyOnce(stream: DataFrame, catalog: ParquetCatalog,
-      table: String, keys: Seq[String], checkpointDir: String): StreamingQuery =
-    stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        catalog.upsertBatch(table, batch.toDF(), keys, s"$checkpointDir#$batchId")
-        ()
-      }
-      .start()
-
   /** Streaming APPEND sink that keeps a data-skipping index fresh AND
     * commits each micro-batch exactly once: every batch lands as a
     * batchId-tagged manifest commit ([[graft.storage.ParquetCatalog

@@ -53,6 +53,22 @@ class ScratchStateSpec extends SparkSpec {
     FileUtils.deleteQuietly(new java.io.File(stateDir))
   }
 
+  test("torn versioned build (marker missing) is wiped, not committed on top of") {
+    val hisDir = s"${sys.props("java.io.tmpdir")}/graft_his_" +
+      Scratch.fingerprint(sfDir).take(8)
+    def runK17() = SparkEntry.queries("k17_history")(spark, sfDir)
+      .collect().map(_.toSeq).toSeq
+    FileUtils.deleteQuietly(new java.io.File(hisDir))
+    try {
+      val first = runK17()
+      // an interrupted build: every commit landed, the marker did not
+      Files.delete(Paths.get(s"$hisDir/_complete"))
+      val rebuilt = runK17()
+      assert(Files.exists(Paths.get(s"$hisDir/_complete")))
+      assert(rebuilt === first)
+    } finally FileUtils.deleteQuietly(new java.io.File(hisDir))
+  }
+
   test("bucketed write skips on matching fingerprint, rebuilds on change") {
     val dir = Files.createTempDirectory("graft_bucketed_spec_").toString
     val df = Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("k", "v")

@@ -864,8 +864,8 @@ class TimeTravelSpec extends SparkSpec {
       try {
         val c = new ParquetCatalog(spark, root)
         barrier.await()
-        c.appendVersionedWithRetry("t", Seq((id, id * 1.0)).toDF("id", "m"),
-          maxAttempts = 5)
+        c.withRetry(5)(
+          c.appendVersioned("t", Seq((id, id * 1.0)).toDF("id", "m")))
         ()
       } catch { case t: Throwable => errs.add(t); () }
     })
