@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** 100k-file skipping rehearsal — the driver-side planning-cost check
   * behind the s13/s14/s15 claims ("a point/range query opens candidate
@@ -30,12 +29,7 @@ import org.apache.spark.sql.SparkSession
 object SkipRehearsal {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4)
 
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val r = f

@@ -153,12 +153,16 @@ object IvfPq {
     * probed-list collect instead of re-running both per index. */
   private[graft] def searchIndexProbed(probes: DataFrame,
       probedLists: Array[Int], idx: DataFrame, idCol: String,
-      model: Model, k: Int, bounded: Boolean = false): DataFrame = {
-    val pruned = idx
-      .filter(col("list_id").isin(probedLists.map(Integer.valueOf): _*))
+      model: Model, k: Int, bounded: Boolean = false): DataFrame =
+    search(probes, probedIndex(idx, probedLists, idCol), model, k, bounded)
+
+  /** The index rows of the probed lists, as a LITERAL `isin` filter (so
+    * a `partitionBy("list_id")` index is partition-pruned at the scan),
+    * with the id column renamed to `neighbor_id`. */
+  private def probedIndex(idx: DataFrame, probedLists: Array[Int],
+      idCol: String): DataFrame =
+    idx.filter(col("list_id").isin(probedLists.map(Integer.valueOf): _*))
       .withColumnRenamed(idCol, "neighbor_id")
-    search(probes, pruned, model, k, bounded)
-  }
 
   /** ADC search over a persisted index built `withNorm = true`: the
     * query side precomputes, per probe row (nQueries·nProbe rows, a
@@ -175,11 +179,7 @@ object IvfPq {
       vecCol: String, model: Model, k: Int, nProbe: Int,
       bounded: Boolean = false): DataFrame = {
     val probes = probeSet(queries, idCol, vecCol, model, nProbe)
-    val probedLists = probes.select("list_id").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val pruned = idx
-      .filter(col("list_id").isin(probedLists.map(Integer.valueOf): _*))
-      .withColumnRenamed(idCol, "neighbor_id")
+    val pruned = probedIndex(idx, collectProbedLists(probes), idCol)
     val coarseLit = typedlit(model.coarse.map(_.toSeq).toSeq)
     val cb = typedlit(
       model.pq.codebooks.map(_.map(_.toSeq).toSeq).toSeq)

@@ -294,9 +294,9 @@ private[spark] class GraftTable(cat: ParquetCatalog, root: String,
       classOf[ParquetFileFormat])
   }
 
-  /** The read version's deletion-vector sidecars — nonempty routes the
-    * scan through [[GraftDvScanBuilder]] (the stock file scan would
-    * resurrect vectored-out rows). */
+  /** The read version's deletion-vector sidecars — nonempty makes the
+    * [[GraftScan]] vectored (the stock file scan would resurrect
+    * vectored-out rows). */
   private lazy val dvSidecars: Seq[String] =
     resolvedVersion.fold(Seq.empty[String])(v =>
       cat.dvSidecarsAbs(tableName, v))
@@ -336,56 +336,41 @@ private[spark] class GraftTable(cat: ParquetCatalog, root: String,
     caps
   }
 
-  /** Vectored tables take the positional scan; clean PARTITIONED
-    * tables report their layout for storage-partitioned joins when the
-    * user opted in via Spark's own SPJ switch (see [[GraftSpjScan]]);
-    * indexed tables prune files through the persisted min/max stats
-    * before split planning (see [[GraftSkipScan]] — the engine read
-    * path's skipping, now on the SQL door too); everything else is the
-    * stock parquet scan. One wrapper per scan: correctness (vectors)
-    * outranks join layout, which outranks file skipping. */
+  /** One scan for every table the stock parquet scan cannot serve
+    * alone: a vectored version (the stock scan would resurrect
+    * vectored-out rows), an indexed table (file skipping before split
+    * planning), or a partitioned or bucketed layout (runtime partition
+    * and bucket pruning, and storage-partitioned-join keys under Spark's
+    * own `spark.sql.sources.v2.bucketing.enabled`). [[GraftScanBuilder]]
+    * decides the scan's vectored / keyed / indexed properties; any other
+    * table reads through the stock scan. Outermost, a bare (or
+    * exactly-partition-filtered) COUNT(*) / MIN / MAX answers from the
+    * manifest + footer/index metadata, minus vectored positions, without
+    * a data page ([[GraftCountStarBuilder]]). */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val inner = delegate.newScanBuilder(options)
     val layout = resolvedVersion.fold(Seq.empty[String])(v =>
       cat.manifest(tableName, v).partitionBy)
-    lazy val statsP = cat.statsPath(tableName)
-    lazy val indexed = resolvedVersion.isDefined &&
-      graft.storage.SkippingIndex.existsAt(statsP)
-    lazy val spjOn = spark.conf
-      .get("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean
+    val statsP = resolvedVersion.map(_ => cat.statsPath(tableName))
+      .filter(graft.storage.SkippingIndex.existsAt)
     // bucket layouts keep the synthetic id INNERMOST; any identity
     // prefix (composite `partitionBy(date) + bucket(key)` — the
     // canonical 100 TB fact shape) is reported alongside the bucket
     // transform, so date pruning and shuffle-free key joins compose
-    lazy val bucketed = resolvedVersion
+    val bucketOf = resolvedVersion
       .filter(_ => layout.lastOption.contains(ParquetCatalog.BucketPartCol))
       .flatMap(v => cat.bucketSpecAt(tableName, v))
-    val chosen: ScanBuilder =
-      if (dvSidecars.nonEmpty) new GraftDvScanBuilder(inner, dvSidecars, layout,
-        if (indexed) Some(statsP) else None, bucketed)
-      else if (bucketed.isDefined && spjOn)
-        // bucket-declared layout: report bucket(n, col) instead of the
-        // synthetic identity partitioning — plus identity transforms
-        // for any composite prefix — so equi-joins on the DATA column
-        // itself go Exchange-free
-        new GraftSpjScanBuilder(inner, layout.dropRight(1),
-          if (indexed) Some(statsP) else None, bucketed)
-      else if (layout.nonEmpty && spjOn)
-        new GraftSpjScanBuilder(inner, layout,
-          if (indexed) Some(statsP) else None)
-      else if (indexed || layout.nonEmpty)
-        // partitioned-but-unindexed tables still take the skip wrapper,
-        // solely for its runtime (dynamic-partition-pruning) filtering
-        new GraftSkipScanBuilder(inner, if (indexed) Some(statsP) else None)
+    val spj = spark.conf
+      .get("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean
+    val scan =
+      if (dvSidecars.nonEmpty || statsP.isDefined || layout.nonEmpty)
+        new GraftScanBuilder(inner, dvSidecars, layout, statsP, bucketOf, spj)
       else inner
-    // outermost: a bare (or exactly-partition-filtered) COUNT(*) /
-    // MIN / MAX answers from the manifest + footer/index metadata
-    // (minus vectored positions) without a data page
     if (resolvedVersion.isDefined && spark.conf
         .get("spark.graft.sql.metadataCount", "true").toBoolean) {
       val v = resolvedVersion.get
       def allFiles(): Seq[String] = cat.dataFilesAbs(tableName, v)
-      new GraftCountStarBuilder(chosen, delegate.schema,
+      new GraftCountStarBuilder(scan, delegate.schema,
         () => cat.exactRowCount(tableName, v),
         files => cat.exactRowCountFor(tableName, v, files),
         (col, dt, files, wantMax) => {
@@ -394,10 +379,8 @@ private[spark] class GraftTable(cat: ParquetCatalog, root: String,
           if (wantMax) mx else mn
         },
         (col, files) =>
-          cat.statsNonNullCount(tableName, v, col, files.getOrElse(allFiles())),
-        minMaxEnabled = spark.conf
-          .get("spark.graft.sql.metadataMinMax", "true").toBoolean)
-    } else chosen
+          cat.statsNonNullCount(tableName, v, col, files.getOrElse(allFiles())))
+    } else scan
   }
 
   /** `DELETE FROM <cat>.t WHERE ...` / `TRUNCATE TABLE <cat>.t` as ONE

@@ -32,12 +32,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * and replaces the whole scan with one single-row partition carrying
   * the partial values; Spark's final aggregation folds the one row. At
   * 100 TB that is O(files) footer metadata once (then O(1) from the
-  * index) instead of reading every row. Kill switches:
+  * index) instead of reading every row. Kill switch:
   * `spark.graft.sql.metadataCount = false` restores the stock
-  * scan-and-count; `spark.graft.sql.metadataMinMax = false` keeps the
-  * count interception but routes MIN/MAX to the real scan. Everything
-  * not answerable delegates verbatim to the wrapped builder chain
-  * (dv / SPJ / skip / stock). */
+  * scan-and-count. Everything not answerable delegates verbatim to the
+  * wrapped builder ([[GraftScanBuilder]] or the stock one). */
 class GraftCountStarBuilder(inner: ScanBuilder, tableSchema: StructType,
     countAll: () => Long, countFor: Seq[String] => Long,
     // (column, type, surviving files, wantMax) → the one requested
@@ -46,8 +44,7 @@ class GraftCountStarBuilder(inner: ScanBuilder, tableSchema: StructType,
     minMaxFor: (String, org.apache.spark.sql.types.DataType,
       Option[Seq[String]], Boolean) => Option[Any],
     countColFor: (String, Option[Seq[String]]) => Option[Long] =
-      (_, _) => None,
-    minMaxEnabled: Boolean = true)
+      (_, _) => None)
   extends GraftForwardingScanBuilder(inner) {
 
   sealed private trait MetaAgg
@@ -101,8 +98,7 @@ class GraftCountStarBuilder(inner: ScanBuilder, tableSchema: StructType,
       }
     val answerable = aggregation.groupByExpressions.isEmpty &&
       shapes.nonEmpty && shapes.forall(_.isDefined) &&
-      (!sawFilters || allConsumed) &&
-      (minMaxEnabled || shapes.forall(_.contains(CountAll)))
+      (!sawFilters || allConsumed)
     if (!answerable) return super.pushAggregation(aggregation)
     // a filtered aggregate folds over the surviving files only; the
     // bare forms use the whole version (count via the O(1) index path)

@@ -50,10 +50,12 @@ object RowIndexBridge {
 
 /** Bridge trait exposing Spark's `private[sql]`
   * [[org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters]]
-  * to [[graft.spark.GraftDvScanBuilder]]: the deletion-vector scan
-  * wrapper must receive catalyst filters so it can forward the
-  * PARTITION-pruning subset (file-granular, position-safe) while
-  * withholding data filters from the parquet reader. */
+  * to the catalog's scan builders ([[graft.spark.GraftScanBuilder]],
+  * [[graft.spark.GraftCountStarBuilder]]): they receive catalyst
+  * filters and forward them to the stock parquet builder. A vectored
+  * scan forwards every deterministic filter (partition and row-group
+  * pruning are both position-safe under the row-index mechanism) yet
+  * reports all of them as post-scan. */
 trait CatalystFilterPushdownBridge
   extends org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 
@@ -68,7 +70,7 @@ object CatalystFilterPushdownBridge {
     case _ => ()
   }
 
-  /** Full delegation (the SPJ wrapper): forward and return the inner
+  /** Full delegation: forward and return the inner
     * builder's own residual, so wrapped pushdown is byte-identical to
     * unwrapped. */
   def pushAll(b: org.apache.spark.sql.connector.read.ScanBuilder,

@@ -461,6 +461,32 @@ class GraftCatalogSpec extends SparkSpec {
     }
   }
 
+  test("SPJ opt-in keeps index skipping when the partition columns are not read") {
+    val (cat, _, c) = freshCatalog("spjnokey")
+    cat.overwriteVersioned("t",
+      (1L to 8000L).map(i => (i, s"p${i % 2}", i * 1.0)).toDF("id", "p", "m"),
+      Seq("p"))
+    cat.compact("t", rowsPerFile = 1000, partitionBy = Seq("p"),
+      clusterBy = Seq("id"))
+    cat.index("t", Seq("id"))
+    val sql = s"SELECT id, m FROM $c.t WHERE id BETWEEN 100 AND 900"
+    def rows(q: org.apache.spark.sql.DataFrame) =
+      q.as[(Long, Double)].collect().sorted.toSeq
+    val expected = rows(spark.sql(sql))
+    withSpj {
+      val q = spark.sql(sql)
+      val desc = q.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+          r.scan.description()
+      }.head
+      val kept = "kept=(\\d+) of (\\d+) files".r.findFirstMatchIn(desc).getOrElse(
+        fail(s"the unkeyed scan under SPJ must still report skipping: $desc"))
+      assert(kept.group(1).toInt * 2 < kept.group(2).toInt,
+        s"the range must prune most clustered files: $desc")
+      assert(rows(q) === expected, "pruning must be invisible to results")
+    }
+  }
+
   test("SPJ never engages where it would be wrong: pruned keys, vectors, aggregates") {
     val (cat, _, c) = freshCatalog("spjoff")
     cat.overwriteVersioned("t",
@@ -733,7 +759,7 @@ class GraftCatalogSpec extends SparkSpec {
           case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
             return scanRows(s.plan)
           case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-              if b.scan.isInstanceOf[graft.spark.GraftSpjScan] =>
+              if (b.scan match { case g: graft.spark.GraftScan => g.keyed; case _ => false }) =>
             b.metrics("numOutputRows").value
           case _ => 0L
         }
@@ -863,7 +889,7 @@ class GraftCatalogSpec extends SparkSpec {
           case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
             return scanRows(s.plan)
           case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-              if b.scan.isInstanceOf[graft.spark.GraftSpjScan] =>
+              if (b.scan match { case g: graft.spark.GraftScan => g.keyed; case _ => false }) =>
             b.metrics("numOutputRows").value
           case _ => 0L
         }
